@@ -58,6 +58,8 @@ from libgrape_lite_spark.plans.kernels import (
     _pinned_rdd_ids,
     _prep_cache,
     _prep_put,
+    hash_partitioning,
+    pin_partitioned,
     segment_part_bounds,
 )
 
@@ -228,8 +230,8 @@ def _patch_layout(
     vids,
     dels,
     touched,
+    key,
     part_expr=None,
-    repartition=None,
     storage_level=None,
 ) -> DataFrame:
     """Generic layout patch: survivors keep their rows (and part), touched
@@ -240,12 +242,15 @@ def _patch_layout(
     * ``push_unw`` — distinct non-self-loop pairs
     * ``pair_min`` — min weight per pair (weighted push / PIE)
 
-    Cost: two narrow scans (survivors over the base layout's pinned
-    blocks, touched copies over the merged table's) + the final
-    co-partitioning shuffle; a pure-removal delta (``touched`` None —
-    dels with no reverse-stored survivors, delv) skips even that shuffle
-    because broadcast anti-joins preserve the base layout's partitioning.
+    The result is pinned by ``key`` into the base layout's fragment count
+    (:func:`pin_partitioned`), like the full build. Cost: two narrow scans
+    (survivors over the base layout's pinned blocks, touched copies over
+    the merged table's) + the final co-partitioning shuffle; a
+    pure-removal delta (``touched`` None — dels with no reverse-stored
+    survivors, delv) skips even that shuffle because broadcast anti-joins
+    preserve the base layout's partitioning, which the pin recognises.
     """
+    nf = _fragments(old)
     survive = _apply_removals(old, directed, vids, dels)
     if touched is None:
         out = survive  # removals only — partitioning preserved, no shuffle
@@ -269,11 +274,15 @@ def _patch_layout(
         if part_expr is not None:
             rec = rec.withColumn("part", part_expr)
         out = survive.unionByName(rec)
-        if repartition is not None:
-            out = repartition(out)
-    if storage_level is not None:
-        return out.localCheckpoint(eager=True, storageLevel=storage_level)
-    return out.localCheckpoint(eager=True)
+    return pin_partitioned(out, nf, key, storage_level)
+
+
+def _fragments(layout: DataFrame) -> int:
+    """The fragment count a base layout was pinned with."""
+    got = hash_partitioning(layout)
+    if got is None:
+        raise ValueError("base layout is not hash-partitioned; rebuild it")
+    return got[1]
 
 
 def _layout_patch_thunk(key, val, merged, has_w, vids, dels, upds, adds, del_surv):
@@ -295,20 +304,16 @@ def _layout_patch_thunk(key, val, merged, has_w, vids, dels, upds, adds, del_sur
 
     if kind == "push":
         directed, weighted = key[1], key[2]
-        # repartition lambdas re-sort by the join key so patched layouts
-        # keep the build-time sort-elision property (plans/kernels.py)
         if weighted:
             touched, del_rm = _route(directed, adds, upds)
             return lambda: _patch_layout(
                 val.select("src", "dst", "weight"), merged, "pair_min", directed,
-                has_w, vids, del_rm, touched,
-                repartition=lambda df: df.repartition("src").sortWithinPartitions("src"),
+                has_w, vids, del_rm, touched, "src",
             )
         touched, del_rm = _route(directed, adds)
         return lambda: _patch_layout(
             val.select("src", "dst"), merged, "push_unw", directed, has_w,
-            vids, del_rm, touched,
-            repartition=lambda df: df.repartition("src").sortWithinPartitions("src"),
+            vids, del_rm, touched, "src",
         )
     if kind == "gather":
         gkey, directed = key[1], key[2]
@@ -317,19 +322,16 @@ def _layout_patch_thunk(key, val, merged, has_w, vids, dels, upds, adds, del_sur
 
         return lambda: _patch_layout(
             val.select("src", "dst"), merged, "gather", directed, has_w,
-            vids, del_rm, touched,
-            repartition=lambda df: df.repartition(gkey).sortWithinPartitions(gkey),
+            vids, del_rm, touched, gkey,
             storage_level=StorageLevel.MEMORY_AND_DISK if gkey == "src" else None,
         )
     if kind == "pie":
-        nf, bounds, directed = key[1], list(key[2]), key[3]
+        bounds, directed = list(key[2]), key[3]
         touched, del_rm = _route(directed, adds, upds)
         return lambda: _patch_layout(
             val.select("src", "dst", "weight", "part"), merged, "pair_min",
-            directed, has_w, vids, del_rm, touched,
+            directed, has_w, vids, del_rm, touched, "part",
             part_expr=segment_part_bounds("src", bounds),
-            # keep the build's part-sorted property (cogroup sort elision)
-            repartition=lambda df: df.repartition(nf, "part").sortWithinPartitions("part"),
         )
     if kind == "gather_dst_kernel":
         nf, directed, salts = key[1], key[2], key[3]
@@ -340,26 +342,10 @@ def _layout_patch_thunk(key, val, merged, has_w, vids, dels, upds, adds, del_sur
             )
         else:
             part_expr = F.pmod(F.hash("dst"), F.lit(nf))
-
-        def thunk():
-            old = val.select("src", "dst", "part")
-            survive = _apply_removals(old, directed, vids, del_rm)
-            if touched is None:
-                return survive.localCheckpoint(eager=True)
-            survive = survive.join(F.broadcast(touched), ["src", "dst"], "left_anti")
-            m = merged.select("src", "dst").join(
-                F.broadcast(touched), ["src", "dst"], "left_semi"
-            )
-            rec = _doubled(m, directed).withColumn("part", part_expr)
-            # keep the build's part-sorted property (cogroup sort elision)
-            return (
-                survive.unionByName(rec)
-                .repartition(nf, "part")
-                .sortWithinPartitions("part")
-                .localCheckpoint(eager=True)
-            )
-
-        return thunk
+        return lambda: _patch_layout(
+            val.select("src", "dst", "part"), merged, "gather", directed, has_w,
+            vids, del_rm, touched, "part", part_expr=part_expr,
+        )
     return None
 
 

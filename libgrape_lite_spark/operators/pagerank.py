@@ -113,7 +113,7 @@ def pagerank(
                     if directed
                     else undirected(edges.select("src", "dst"))
                 )
-                return partition_edges(a, nf).localCheckpoint(eager=True)
+                return partition_edges(a, nf)
 
             adj = cached_prepared(edges, ("pr_kernel", nf, directed), _build_kernel_adj)
         else:

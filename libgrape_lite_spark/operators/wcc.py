@@ -98,12 +98,10 @@ def wcc(
     with static_plans(spark):
         # Both directions once; parallel edges/self-loops add nothing to a
         # min-aggregate, so dedup shrinks every subsequent shuffle.
-        # Pre-partition the (big) adjacency by the per-round join key ONCE
-        # — shared across operator calls on this edge table
-        # (plans/kernels.py:push_adjacency_table): localCheckpoint
-        # preserves outputPartitioning, so every superstep's join exchanges
-        # only the vertex-sized state side (verified via .explain — Scan
-        # ExistingRDD feeds the join with no Exchange above it).
+        # The (big) adjacency is pinned by the per-round join key ONCE and
+        # shared across operator calls on this edge table
+        # (plans/kernels.py:push_adjacency_table), so every superstep's
+        # join exchanges only the vertex-sized state side.
         adj = push_adjacency_table(edges, directed=False, weighted=False)
 
         resumed = drv.latest_checkpoint()
@@ -296,7 +294,7 @@ def _wcc_kernel(
             .where(F.col("src") != F.col("dst"))
             .dropDuplicates(["src", "dst"])
         )
-        adj = partition_edges(adj, nf).localCheckpoint(eager=True)
+        adj = partition_edges(adj, nf)
 
         step = 0
         state = drv.materialize(

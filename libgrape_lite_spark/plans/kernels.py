@@ -35,6 +35,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from libgrape_lite_spark.session import static_plans
+
 _REDUCERS = {
     "sum": (np.add, 0.0),
     "min": (np.minimum, np.inf),
@@ -51,21 +53,101 @@ _REDUCERS_LONG = {
 }
 
 
-def partition_edges(edges: DataFrame, num_fragments: int, key: str = "src") -> DataFrame:
-    """Assign each edge to its ``key``-endpoint's fragment and co-locate —
-    the one-time `PrepareToRunApp` stage; cache the result across
-    supersteps. ``key="src"`` for gathers that read source state (PR, WCC
-    push); ``key="dst"`` for gathers that read destination state (CDLP
-    out-adjacency votes).
+def hash_partitioning(df: DataFrame) -> tuple[list[str], int] | None:
+    """``(key columns, partition count)`` of ``df``'s executed plan when it
+    is hash-partitioned, else None. A single-partition plan (what Spark
+    plans for a one-partition repartition) reads ``([], 1)``: it is
+    clustered by every key."""
+    part = df._jdf.queryExecution().executedPlan().outputPartitioning()
+    name = part.getClass().getSimpleName()
+    if name == "SinglePartition$":
+        return [], 1
+    if name != "HashPartitioning":
+        return None
+    exprs = part.expressions()
+    keys = []
+    for i in range(exprs.size()):
+        e = exprs.apply(i)
+        if e.getClass().getSimpleName() != "AttributeReference":
+            return None
+        keys.append(e.name())
+    return keys, part.numPartitions()
 
-    Sorted by ``part`` within partitions: every consumer is a
-    ``groupBy("part").cogroup(...)`` whose sort-based cogroup re-SORTED
-    the O(E) side each superstep — pre-sorting once at build satisfies
-    the cogroup's required child ordering, and localCheckpoint preserves
-    outputOrdering, so the per-round plan keeps only the (vertex-sized)
-    state-side sort (r8, guide §2.4 — plan-verified: 2 Sort nodes → 1)."""
+
+#: plan nodes that pass their child's partitioning and ordering through
+_NARROW_NODES = frozenset(
+    ("WholeStageCodegenExec", "InputAdapter", "ProjectExec", "FilterExec",
+     "ColumnarToRowExec")
+)
+
+
+def layout_scan_parents(df: DataFrame, layouts) -> list[str]:
+    """For every scan of a pinned layout in ``df``'s executed plan, the
+    class name of the nearest operator above it that is not a narrow
+    pass-through (``""`` when the scan is the plan root). A
+    ``ShuffleExchangeExec`` or ``SortExec`` there means each execution
+    re-shuffles or re-sorts that layout."""
+    rdd_ids = {i for layout in layouts for i in _pinned_rdd_ids(layout)}
+    found: list[str] = []
+
+    def walk(node, above: str) -> None:
+        name = node.getClass().getSimpleName()
+        if name == "RDDScanExec" and node.rdd().id() in rdd_ids:
+            found.append(above)
+        below = above if name in _NARROW_NODES else name
+        children = node.children()
+        for i in range(children.size()):
+            walk(children.apply(i), below)
+
+    walk(df._jdf.queryExecution().executedPlan(), "")
+    return found
+
+
+def pin_partitioned(
+    df: DataFrame, num_fragments: int, key: str, storage_level=None
+) -> DataFrame:
+    """Pin ``df`` hash-partitioned by ``key`` into ``num_fragments``
+    partitions, sorted by ``key`` within each — how every prepared layout
+    is pinned (the one-time ``PrepareToRunApp`` stage).
+
+    A ``localCheckpoint`` records its physical plan's output partitioning
+    and ordering on the ``LogicalRDD`` it leaves behind, so every later
+    superstep that joins or cogroups on ``key`` reads the layout with no
+    Exchange and no Sort above its scan. That holds ONLY when the
+    checkpoint is taken with AQE off: under AQE the checkpointed plan
+    reports ``UnknownPartitioning(0)`` (and AQE may coalesce the shuffle
+    to one partition), so each superstep re-shuffles and re-sorts the
+    whole table. The pin therefore runs inside :func:`static_plans`, and
+    the recorded partitioning is checked afterwards — a layout that lost
+    it raises here instead of silently costing an O(E) shuffle per round."""
+    with static_plans(df.sparkSession):
+        out = df.repartition(num_fragments, key).sortWithinPartitions(key)
+        if storage_level is None:
+            out = out.localCheckpoint(eager=True)
+        else:
+            out = out.localCheckpoint(eager=True, storageLevel=storage_level)
+        got = hash_partitioning(out)
+    if got != (([], 1) if num_fragments == 1 else ([key], num_fragments)):
+        release_pinned(out)
+        raise RuntimeError(
+            f"pinned layout lost its partitioning: expected "
+            f"hashpartitioning({key}, {num_fragments}), got {got}"
+        )
+    return out
+
+
+def partition_edges(edges: DataFrame, num_fragments: int, key: str = "src") -> DataFrame:
+    """Assign each edge to its ``key``-endpoint's fragment and pin it
+    co-located by ``part`` (:func:`pin_partitioned`). ``key="src"`` for
+    gathers that read source state (PR, WCC push); ``key="dst"`` for
+    gathers that read destination state (CDLP out-adjacency votes).
+
+    Every consumer is a ``groupBy("part").cogroup(...)``; the pinned
+    partitioning and ``part`` ordering satisfy its required distribution
+    and child ordering, so the per-round plan keeps only the
+    (vertex-sized) state-side exchange and sort."""
     withp = edges.withColumn("part", F.pmod(F.hash(key), F.lit(num_fragments)))
-    return withp.repartition(num_fragments, "part").sortWithinPartitions("part")
+    return pin_partitioned(withp, num_fragments, "part")
 
 
 def partition_state(state: DataFrame, num_fragments: int) -> DataFrame:
@@ -85,7 +167,7 @@ def gather_scatter(
     ``state[v].value (op weight)`` to u; combine with ``reduce_fn``.
 
     Returns DataFrame(id, gathered). ``edges_p`` must come from
-    :func:`partition_edges` (and be cached by the caller).
+    :func:`partition_edges`.
     ``value_dtype="long"`` keeps the whole path in int64 (id-valued state).
     """
     is_long = value_dtype == "long"
@@ -717,15 +799,25 @@ def prepared_session(*edge_tables: DataFrame):
     return _cm()
 
 
+def fragment_count(spark, num_fragments: int | None = None) -> int:
+    """``num_fragments``, defaulting to the shuffle partition count."""
+    return num_fragments or int(spark.conf.get("spark.sql.shuffle.partitions"))
+
+
 def push_adjacency_table(
-    edges: DataFrame, directed: bool = False, weighted: bool = False
+    edges: DataFrame,
+    directed: bool = False,
+    weighted: bool = False,
+    num_fragments: int | None = None,
 ) -> DataFrame:
-    """The frontier-push impls' shared gather layout: hash-partitioned by
-    ``src`` and pinned. Unweighted (wcc dataframe, bfs push) keeps distinct
+    """The frontier-push impls' shared gather layout: pinned by ``src``
+    (:func:`pin_partitioned`, ``num_fragments`` defaulting to the shuffle
+    partition count). Unweighted (wcc dataframe, bfs push) keeps distinct
     non-self-loop (src, dst) pairs; weighted (sssp dataframe) keeps the min
     weight per pair — the only weight that can win a relaxation. Built once
     per (graph, direction, weightedness); every operator call on the same
-    edge table reuses it."""
+    edge table reuses it, and each superstep's join against the
+    frontier/state exchanges and sorts only the vertex-sized side."""
 
     def build() -> DataFrame:
         from libgrape_lite_spark.functions.edges import undirected as _undirected
@@ -743,26 +835,22 @@ def push_adjacency_table(
             adj = adj.where(F.col("src") != F.col("dst")).dropDuplicates(
                 ["src", "dst"]
             )
-        # sorted by the join key at build: the per-superstep sort-merge
-        # join against the frontier/state otherwise re-sorts this O(E)
-        # side EVERY round; localCheckpoint preserves outputOrdering so
-        # the round plans keep only vertex-sized sorts (r8, guide §2.4)
-        return (
-            adj.repartition("src")
-            .sortWithinPartitions("src")
-            .localCheckpoint(eager=True)
-        )
+        nf = fragment_count(edges.sparkSession, num_fragments)
+        return pin_partitioned(adj, nf, "src")
 
     return cached_prepared(edges, ("push", directed, weighted), build)
 
 
 def gather_adjacency_table(
-    edges: DataFrame, key: str = "src", directed: bool = False
+    edges: DataFrame,
+    key: str = "src",
+    directed: bool = False,
+    num_fragments: int | None = None,
 ) -> DataFrame:
     """The gather impls' shared adjacency layout: doubled (unless
     directed), parallel edges KEPT (multiplicity feeds CDLP votes and the
     reference's parallel-edge-counting degree, cdlp_utils.h:31-33),
-    hash-partitioned by the gather join key and pinned.
+    pinned by the gather join key (:func:`pin_partitioned`).
 
     ``key="src"`` is PageRank's layout — state joins on the edge tail;
     stored serialized (MEMORY_AND_DISK) because it is the largest pinned
@@ -781,19 +869,9 @@ def gather_adjacency_table(
 
         e = edges.select("src", "dst")
         a = e if directed else _undirected(e)
-        # sorted by the gather join key at build — same per-round
-        # sort-elision rationale as push_adjacency_table
-        if key == "src":
-            return (
-                a.repartition("src")
-                .sortWithinPartitions("src")
-                .localCheckpoint(eager=True, storageLevel=StorageLevel.MEMORY_AND_DISK)
-            )
-        return (
-            a.repartition("dst")
-            .sortWithinPartitions("dst")
-            .localCheckpoint(eager=True)
-        )
+        nf = fragment_count(edges.sparkSession, num_fragments)
+        level = StorageLevel.MEMORY_AND_DISK if key == "src" else None
+        return pin_partitioned(a, nf, key, level)
 
     return cached_prepared(edges, ("gather", key, directed), build)
 
@@ -824,16 +902,8 @@ def dst_kernel_adjacency_table(
                     F.lit(num_fragments),
                 ),
             )
-            # sorted by part once at build → per-round cogroup sort elided
-            # (see partition_edges)
-            return (
-                withp.repartition(num_fragments, "part")
-                .sortWithinPartitions("part")
-                .localCheckpoint(eager=True)
-            )
-        return partition_edges(a, num_fragments, key="dst").localCheckpoint(
-            eager=True
-        )
+            return pin_partitioned(withp, num_fragments, "part")
+        return partition_edges(a, num_fragments, key="dst")
 
     return cached_prepared(
         edges, ("gather_dst_kernel", num_fragments, directed, salts), build
@@ -841,13 +911,19 @@ def dst_kernel_adjacency_table(
 
 
 def cached_degree_table(
-    edges: DataFrame, vertices: DataFrame, adj: DataFrame, directed: bool
+    edges: DataFrame,
+    vertices: DataFrame,
+    adj: DataFrame,
+    directed: bool,
+    num_fragments: int | None = None,
 ) -> DataFrame:
     """Out-degree table (parallel edges counted, zero-degree vertices
-    included) memoized per (edge table, vertices object, direction) — the
-    vertices frame is held and identity-checked so a different vertex set
-    over the same edges rebuilds. PageRank runs (fixed-round + convergence
-    mode) on one graph share a single degree pass."""
+    included), pinned by ``id`` (:func:`pin_partitioned`) so PageRank's
+    per-round state join on ``id`` reads it in place. Memoized per (edge
+    table, vertices object, direction) — the vertices frame is held and
+    identity-checked so a different vertex set over the same edges
+    rebuilds. PageRank runs (fixed-round + convergence mode) on one graph
+    share a single degree pass."""
     cache = _prep_cache(edges)
     key = ("outdeg", directed)
     with _PREP_LOCK:
@@ -858,7 +934,8 @@ def cached_degree_table(
     from libgrape_lite_spark.functions.edges import out_degrees
 
     # degree job runs outside the lock (prepare_graph builds concurrently)
-    built = (vertices, out_degrees(adj, vertices).localCheckpoint(eager=True))
+    nf = fragment_count(edges.sparkSession, num_fragments)
+    built = (vertices, pin_partitioned(out_degrees(adj, vertices), nf, "id"))
     with _PREP_LOCK:
         ent = cache.get(key)
         if ent is not None and ent[0] is vertices:
@@ -932,7 +1009,8 @@ def pie_fragment_table(
     edges: DataFrame, num_fragments: int, bounds: list[int], directed: bool = False
 ) -> DataFrame:
     """The PIE kernels' shared fragment table: (src, dst, weight, part),
-    range-partitioned by :func:`segment_part_bounds` and pinned.
+    fragment-assigned by :func:`segment_part_bounds` and pinned by
+    ``part`` (:func:`pin_partitioned`).
 
     One table serves wcc/sssp/bfs auto impls on the same graph — wcc
     projects (src, dst) and drops self-loops, bfs overrides the weight
@@ -951,16 +1029,12 @@ def pie_fragment_table(
         )
         e = edges.select("src", "dst", w)
         adj = e if directed else _undirected(e)
-        # sorted by part once at build → per-round cogroup sort elided
-        # (see partition_edges)
-        return (
+        frag = (
             adj.groupBy("src", "dst")
             .agg(F.min("weight").alias("weight"))
             .withColumn("part", segment_part_bounds("src", bounds))
-            .repartition(num_fragments, "part")
-            .sortWithinPartitions("part")
-            .localCheckpoint(eager=True)
         )
+        return pin_partitioned(frag, num_fragments, "part")
 
     return cached_prepared(
         edges, ("pie", num_fragments, tuple(bounds), directed), build
@@ -990,7 +1064,10 @@ def prepare_graph(
     Benchmarks call this inside the timed graph-build step so each
     operator's number measures supersteps, not whoever ran first
     (VERDICT r4: per-op times were order-dependent). Returns the layouts
-    by name; they stay memoized on ``edges`` either way.
+    by name; they stay memoized on ``edges`` either way. Every layout is
+    pinned hash-partitioned by its join key into ``num_fragments``
+    partitions (:func:`pin_partitioned`), whatever the session's AQE
+    setting.
 
     The independent layout builds are submitted from a small driver
     thread pool (guide §2.6 — Spark's scheduler runs concurrent jobs
@@ -1002,19 +1079,18 @@ def prepare_graph(
     AFTER the concurrent materializations so the LRU dict is never
     mutated concurrently; ``cached_prepared`` then reuses the built
     DataFrames via each builder's memoized closure."""
-    spark = edges.sparkSession
-    nf = num_fragments or int(spark.conf.get("spark.sql.shuffle.partitions"))
+    nf = fragment_count(edges.sparkSession, num_fragments)
 
     def _src_then_degree():
         # degree depends on the src gather layout — chain them in one task
-        gsrc = gather_adjacency_table(edges, "src", directed)
-        return gsrc, cached_degree_table(edges, vertices, gsrc, directed)
+        gsrc = gather_adjacency_table(edges, "src", directed, nf)
+        return gsrc, cached_degree_table(edges, vertices, gsrc, directed, nf)
 
     builders: list[tuple[str, object]] = [
-        ("push", lambda: push_adjacency_table(edges, directed=directed, weighted=False)),
-        ("push_weighted", lambda: push_adjacency_table(edges, directed=directed, weighted=True)),
+        ("push", lambda: push_adjacency_table(edges, directed, False, nf)),
+        ("push_weighted", lambda: push_adjacency_table(edges, directed, True, nf)),
         ("_src_deg", _src_then_degree),
-        ("gather_dst", lambda: gather_adjacency_table(edges, "dst", directed)),
+        ("gather_dst", lambda: gather_adjacency_table(edges, "dst", directed, nf)),
     ]
     if kernel:
         builders.append(

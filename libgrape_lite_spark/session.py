@@ -10,6 +10,7 @@ analog of the reference's ``Rebalancer`` (``grape/fragment/rebalancer.h``).
 from __future__ import annotations
 
 import os
+import threading
 from contextlib import contextmanager as _contextmanager
 
 from pyspark.sql import SparkSession
@@ -54,6 +55,14 @@ def get_spark(
     return builder.getOrCreate()
 
 
+#: guards the static_plans scope count; the AQE flag is session-wide, so
+#: scopes entered from several driver threads (prepare_graph's pool) or
+#: nested inside each other share one save/restore
+_STATIC_LOCK = threading.Lock()
+_static_depth = 0
+_static_saved: str | None = None
+
+
 @_contextmanager
 def static_plans(spark: SparkSession):
     """Disable AQE for the duration of an iterative superstep loop.
@@ -64,13 +73,24 @@ def static_plans(spark: SparkSession):
     AQE on — scripts/audit_plans.py). Skew inside the loop is handled by
     map-side partial aggregation + explicit salting
     (functions/partitioning.py); AQE stays on for everything else.
+
+    Scopes nest and overlap across threads: the first entry saves and
+    disables the flag, only the last exit restores it — a scope exiting
+    early must not re-enable AQE under a sibling thread's running pin.
     """
-    old = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    global _static_depth, _static_saved
+    with _STATIC_LOCK:
+        if _static_depth == 0:
+            _static_saved = spark.conf.get("spark.sql.adaptive.enabled")
+            spark.conf.set("spark.sql.adaptive.enabled", "false")
+        _static_depth += 1
     try:
         yield
     finally:
-        spark.conf.set("spark.sql.adaptive.enabled", old)
+        with _STATIC_LOCK:
+            _static_depth -= 1
+            if _static_depth == 0:
+                spark.conf.set("spark.sql.adaptive.enabled", _static_saved)
 
 
 def tune_shuffle_partitions(

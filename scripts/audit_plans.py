@@ -4,8 +4,9 @@ Checks (each prints PASS/FAIL and the evidence lines):
 
 1. Parquet scans get predicate pushdown + column pruning (PushedFilters,
    ReadSchema) for a filtered/projected documents query.
-2. A PageRank superstep join does NOT re-exchange the pre-partitioned
-   adjacency (no Exchange directly above the adjacency scan).
+2. Every layout ``prepare_graph`` pins (default config, AQE on) keeps
+   its hash partitioning, and a library PageRank superstep neither
+   re-exchanges nor re-sorts the pinned adjacency.
 3. Hot-path expressions run inside WholeStageCodegen.
 4. The frontier join in BFS/SSSP broadcasts the (small) frontier side.
 
@@ -32,11 +33,39 @@ def plan_of(df) -> str:
     return buf.getvalue()
 
 
+def superstep_plans(spark, run) -> list:
+    """Run an operator with a driver that keeps each superstep's state
+    DataFrame; its executed plan is fixed when the operator materializes
+    it, inside the operator's own static_plans scope."""
+    from libgrape_lite_spark.plans.superstep import IterationDriver
+
+    plans = []
+
+    class Recorder(IterationDriver):
+        def materialize(self, df, step):
+            if step > 0:
+                df._jdf.queryExecution().executedPlan()
+                plans.append(df)
+            return super().materialize(df, step)
+
+    run(Recorder(spark)).collect()
+    return plans
+
+
+def layout_check(step, layouts) -> tuple[bool, str]:
+    """No ShuffleExchange or Sort directly above a pinned-layout scan."""
+    from libgrape_lite_spark.plans.kernels import layout_scan_parents
+
+    parents = layout_scan_parents(step, layouts)
+    ok = bool(parents) and not {"ShuffleExchangeExec", "SortExec"} & set(parents)
+    return ok, f"layout scans feed {parents or 'NOTHING'}"
+
+
 def main() -> int:
     from pyspark.sql import functions as F
 
     from libgrape_lite_spark import get_spark
-    from libgrape_lite_spark.functions.edges import build_graph_from_transcripts, undirected
+    from libgrape_lite_spark.functions.edges import build_graph_from_transcripts
     from libgrape_lite_spark.sources.events import events_to_transcripts
 
     spark = get_spark(master="local[4]", shuffle_partitions=8)
@@ -56,36 +85,33 @@ def main() -> int:
                     f"{pruned.group(0) if pruned else 'NO pruned ReadSchema'}"))
     sections.append(("Filtered+projected parquet scan", p))
 
-    # 2. superstep join does not re-shuffle pre-partitioned adjacency
+    # 2. the library path: prepare_graph under the default config (AQE on)
+    # pins every layout hash-partitioned by its key, and PageRank's
+    # superstep reads the gather layout with no Exchange or Sort above it
+    from libgrape_lite_spark.operators import pagerank, wcc
+    from libgrape_lite_spark.plans.kernels import hash_partitioning, prepare_graph
+
     t = events_to_transcripts(spark, SF)
     vertices, edges = build_graph_from_transcripts(t)
     vertices = vertices.localCheckpoint(eager=True)
     edges = edges.localCheckpoint(eager=True)
-    state = vertices.select(F.col("id").alias("src"), F.lit(1.0).alias("r"))
-    # disable broadcast to audit the large-state shape; static_plans =
-    # the operators' in-loop config (AQE re-plans insert an extra Exchange,
-    # and an AQE-materialized repartition loses its partitioning metadata)
-    from libgrape_lite_spark.session import static_plans
-
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    with static_plans(spark):
-        adj = (
-            undirected(edges.select("src", "dst"))
-            .repartition("src")
-            .localCheckpoint(eager=True)
-        )
-        step = (
-            adj.join(state, "src").groupBy(F.col("dst").alias("id")).agg(F.sum("r").alias("g"))
-        )
-        p2 = plan_of(step)
-        p2_simple = step._jdf.queryExecution().executedPlan().toString()
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-    # count Exchanges: expect exactly 2 (state side into join, groupBy) —
-    # none for the adjacency scan
+    layouts = prepare_graph(vertices, edges)
+    parts = {name: hash_partitioning(df) for name, df in layouts.items()}
+    unpartitioned = sorted(name for name, got in parts.items() if got is None)
+    results.append(("prepare_graph: every pinned layout hash-partitioned by its key",
+                    not unpartitioned,
+                    ", ".join(f"{n}={g[0][0]}/{g[1]}" if g else f"{n}=NONE"
+                              for n, g in sorted(parts.items()))))
+    step = superstep_plans(
+        spark, lambda d: pagerank(vertices, edges, max_rounds=2, driver=d)
+    )[-1]
+    p2 = plan_of(step)
+    p2_simple = step._jdf.queryExecution().executedPlan().toString()
+    ok2, ev2 = layout_check(step, layouts.values())
     n_exchange = len(re.findall(r"\(\d+\) Exchange", p2.split("== Physical Plan ==")[1]))
-    results.append(("superstep: adjacency not re-shuffled (2 exchanges: state + combine)",
-                    n_exchange == 2, f"exchanges={n_exchange}"))
-    sections.append(("PageRank gather superstep (broadcast off, static plans)", p2))
+    results.append(("PageRank superstep (library path): gather layout not re-shuffled "
+                    "or re-sorted", ok2, f"{ev2}, exchanges={n_exchange}"))
+    sections.append(("PageRank superstep (library path: prepare_graph, then pagerank)", p2))
 
     # 3. whole-stage codegen in hot path (executed plan shows *(n) spans)
     results.append(
@@ -96,7 +122,7 @@ def main() -> int:
 
     # 4. frontier join broadcasts the frontier
     frontier = vertices.limit(10).select(F.col("id").alias("src"))
-    hop = adj.join(frontier, "src").select("dst")
+    hop = layouts["push"].join(frontier, "src").select("dst")
     p3 = plan_of(hop)
     results.append(("small frontier broadcast join", "BroadcastHashJoin" in p3, "see plan"))
     sections.append(("BFS frontier expansion", p3))
@@ -123,40 +149,24 @@ def main() -> int:
          "array_intersect" in p5, "array_intersect in plan" if "array_intersect" in p5 else "missing"))
     sections.append(("MinHash dedup verify stage", p5))
 
-    # 7. PIE auto-impl superstep (cogroup + Arrow kernel + min-combine):
-    # the pinned, range-partitioned adjacency must enter the cogroup with
-    # NO Exchange above its scan — only the state side's clustering and
-    # the global min-combine shuffle (2 exchanges/superstep, same budget
-    # as the dataframe superstep in check 2)
-    from libgrape_lite_spark.plans.kernels import (
-        cached_edge_balanced_bounds,
-        local_min_fixpoint,
-        segment_part_bounds,
-    )
-
-    with static_plans(spark):
-        nf = 8
-        bounds = cached_edge_balanced_bounds(edges, nf, key="src")
-        adj_p = (
-            undirected(edges.select("src", "dst"))
-            .where(F.col("src") != F.col("dst"))
-            .dropDuplicates(["src", "dst"])
-            .withColumn("part", segment_part_bounds("src", bounds))
-            .repartition(nf, "part")
-            .localCheckpoint(eager=True)
-        )
-        pie_state = vertices.select("id", F.col("id").alias("comp"))
-        step7 = local_min_fixpoint(adj_p, pie_state, "comp", nf, bounds=bounds)
-        p7 = plan_of(step7)
+    # 7. PIE auto-impl superstep (cogroup + Arrow kernel + min-combine) on
+    # the library path: wcc(impl="auto") over prepare_graph's fragment
+    # table must enter the cogroup with NO Exchange or Sort above its scan
+    step7 = superstep_plans(
+        spark, lambda d: wcc(vertices, edges, impl="auto", max_rounds=2, driver=d)
+    )[-1]
+    p7 = plan_of(step7)
     phys7 = p7.split("== Physical Plan ==")[1]
+    ok7, ev7 = layout_check(step7, layouts.values())
     n_ex7 = len(re.findall(r"\(\d+\) Exchange", phys7))
     has_kernel = "FlatMapCoGroupsInPandas" in phys7
     results.append(
-        ("PIE superstep (wcc/sssp/bfs auto): adjacency not re-shuffled into the "
-         "cogroup kernel (2 exchanges: state + combine)",
-         n_ex7 == 2 and has_kernel,
-         f"exchanges={n_ex7}, arrow cogroup kernel={'yes' if has_kernel else 'MISSING'}"))
-    sections.append(("PIE local-fixpoint superstep (cogroup + Arrow kernel + min-combine)", p7))
+        ("PIE superstep (wcc auto, library path): fragment table not re-shuffled "
+         "or re-sorted into the cogroup kernel",
+         ok7 and has_kernel,
+         f"{ev7}, exchanges={n_ex7}, "
+         f"arrow cogroup kernel={'yes' if has_kernel else 'MISSING'}"))
+    sections.append(("PIE local-fixpoint superstep (wcc auto, library path)", p7))
 
     # 8. banded simhash dedup: the corpus self-join must be a shuffled
     # hash join — a (mis-estimated) broadcast of the C x bands banded
@@ -207,10 +217,13 @@ def main() -> int:
     # claim, machine-checked; BroadcastExchange of the delta-sized
     # removal sets is expected and not counted)
     from libgrape_lite_spark.mutation import _apply_removals
+    from libgrape_lite_spark.session import static_plans
 
     with static_plans(spark):
         vids = spark.createDataFrame([(7,)], "vid long").localCheckpoint(eager=True)
-        patched = _apply_removals(adj_p.select("src", "dst", "part"), False, vids, None)
+        patched = _apply_removals(
+            layouts["pie"].select("src", "dst", "part"), False, vids, None
+        )
         p10 = plan_of(patched)
     phys10 = p10.split("== Physical Plan ==")[1]
     n_ex10 = len(re.findall(r"\(\d+\) Exchange", phys10))

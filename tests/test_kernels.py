@@ -22,7 +22,7 @@ def test_gather_scatter_sum_matches_join(spark):
         .agg(F.sum("val").alias("g"))
         .collect()
     }
-    ep = partition_edges(e, 4).localCheckpoint(eager=True)
+    ep = partition_edges(e, 4)
     got = {r["id"]: r["gathered"] for r in gather_scatter(ep, state, "val", 4).collect()}
     assert set(got) == set(want)
     for k in want:
@@ -36,7 +36,7 @@ def test_gather_scatter_min(spark):
     state = spark.createDataFrame(
         [(1, 9.0), (2, 4.0), (4, 7.0)], "id long, val double"
     )
-    ep = partition_edges(e, 3).localCheckpoint(eager=True)
+    ep = partition_edges(e, 3)
     got = {r["id"]: r["gathered"] for r in
            gather_scatter(ep, state, "val", 3, reduce_fn="min").collect()}
     assert got == {3: 4.0, 5: 9.0}
@@ -160,3 +160,116 @@ def test_sssp_auto_equals_dataframe(spark):
     got_d = {r["id"]: r["dist"] for r in
              sssp(v, e, source=0, directed=True, impl="auto", num_fragments=4).collect()}
     assert got_d == want_d
+
+
+def test_static_plans_overlapping_threads(spark):
+    """Two threads' overlapping static_plans scopes: AQE stays off until
+    the LAST scope exits, and nested scopes restore only at the outermost
+    exit."""
+    import threading
+
+    from libgrape_lite_spark.session import static_plans
+
+    key = "spark.sql.adaptive.enabled"
+    assert spark.conf.get(key) == "true"
+    a_in, b_in, a_out = threading.Event(), threading.Event(), threading.Event()
+    seen = {}
+
+    def first():
+        with static_plans(spark):
+            a_in.set()
+            b_in.wait(30)
+        a_out.set()
+
+    def second():
+        a_in.wait(30)
+        with static_plans(spark):
+            b_in.set()
+            a_out.wait(30)
+            seen["after_first_exit"] = spark.conf.get(key)
+
+    threads = [threading.Thread(target=first), threading.Thread(target=second)]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(60)
+    assert seen == {"after_first_exit": "false"}
+    assert spark.conf.get(key) == "true"
+
+    with static_plans(spark):
+        with static_plans(spark):
+            pass
+        assert spark.conf.get(key) == "false"
+    assert spark.conf.get(key) == "true"
+
+
+def _superstep_plans(spark, run) -> list:
+    """Each superstep's state DataFrame from ``run(driver)``; its executed
+    plan is fixed inside the operator's own static_plans scope."""
+    from libgrape_lite_spark.plans.superstep import IterationDriver
+
+    plans = []
+
+    class Recorder(IterationDriver):
+        def materialize(self, df, step):
+            if step > 0:
+                df._jdf.queryExecution().executedPlan()
+                plans.append(df)
+            return super().materialize(df, step)
+
+    run(Recorder(spark)).collect()
+    return plans
+
+
+def _assert_layouts_stay_partitioned(spark, v, e, nf):
+    from libgrape_lite_spark.operators import cdlp, pagerank, sssp, wcc
+    from libgrape_lite_spark.plans.kernels import (
+        hash_partitioning,
+        layout_scan_parents,
+        prepare_graph,
+    )
+
+    layouts = prepare_graph(v, e)
+    keys = {"push": "src", "push_weighted": "src", "gather_src": "src",
+            "gather_dst": "dst", "pie": "part", "degree": "id"}
+    assert set(layouts) == set(keys)
+    for name, layout in layouts.items():
+        assert hash_partitioning(layout) == ([keys[name]], nf), name
+
+    runs = {
+        "pagerank": lambda d: pagerank(v, e, max_rounds=3, driver=d),
+        "cdlp": lambda d: cdlp(v, e, max_rounds=3, driver=d),
+        "sssp": lambda d: sssp(v, e, source=0, driver=d),
+        "wcc": lambda d: wcc(v, e, impl="auto", driver=d),
+    }
+    for app, run in runs.items():
+        plans = _superstep_plans(spark, run)
+        assert plans, app
+        for step, plan in enumerate(plans, 1):
+            parents = layout_scan_parents(plan, layouts.values())
+            assert parents, (app, step)  # the superstep reads a pinned layout
+            bad = [p for p in parents if p in ("ShuffleExchangeExec", "SortExec")]
+            assert not bad, (app, step, parents)
+
+
+def test_prepared_layouts_stay_partitioned(spark):
+    """Under the default (AQE on) session, every layout prepare_graph pins
+    reports hashpartitioning(<its key>, nf), and no superstep of pagerank,
+    cdlp, sssp or wcc (auto) re-exchanges or re-sorts a pinned layout —
+    on the base graph and on a mutate()d one."""
+    from libgrape_lite_spark.mutation import mutate
+
+    nf = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    pairs = [(i, (i * 7 + 3) % 60, 1.0 + i % 3) for i in range(60)]
+    pairs += [(i, i + 1, 2.0) for i in range(0, 59, 2)]
+    v = make_vertices(spark, range(60))
+    e = make_edges(spark, pairs)
+    _assert_layouts_stay_partitioned(spark, v, e, nf)
+
+    delta = spark.createDataFrame(
+        [("add", 5, 40, 1.5), ("add", 1, 33, 0.5), ("del", 0, 3, None),
+         ("upd", 2, 17, 9.0)],
+        "op string, src long, dst long, weight double",
+    )
+    v2, e2 = mutate(v, e, delta)
+    _assert_layouts_stay_partitioned(spark, v2, e2, nf)
