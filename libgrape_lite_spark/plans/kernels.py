@@ -103,6 +103,27 @@ def layout_scan_parents(df: DataFrame, layouts) -> list[str]:
     return found
 
 
+def superstep_plans(spark, run) -> list[DataFrame]:
+    """Each superstep's state DataFrame from ``run(driver)``, an operator
+    call that takes an :class:`IterationDriver`. Its executed plan is
+    fixed when the operator materializes it, inside the operator's own
+    :func:`static_plans` scope, so :func:`layout_scan_parents` reads the
+    plan the superstep ran."""
+    from libgrape_lite_spark.plans.superstep import IterationDriver
+
+    plans: list[DataFrame] = []
+
+    class Recorder(IterationDriver):
+        def materialize(self, df, step):
+            if step > 0:
+                df._jdf.queryExecution().executedPlan()
+                plans.append(df)
+            return super().materialize(df, step)
+
+    run(Recorder(spark)).collect()
+    return plans
+
+
 def pin_partitioned(
     df: DataFrame, num_fragments: int, key: str, storage_level=None
 ) -> DataFrame:
@@ -799,20 +820,12 @@ def prepared_session(*edge_tables: DataFrame):
     return _cm()
 
 
-def fragment_count(spark, num_fragments: int | None = None) -> int:
-    """``num_fragments``, defaulting to the shuffle partition count."""
-    return num_fragments or int(spark.conf.get("spark.sql.shuffle.partitions"))
-
-
 def push_adjacency_table(
-    edges: DataFrame,
-    directed: bool = False,
-    weighted: bool = False,
-    num_fragments: int | None = None,
+    edges: DataFrame, directed: bool = False, weighted: bool = False
 ) -> DataFrame:
     """The frontier-push impls' shared gather layout: pinned by ``src``
-    (:func:`pin_partitioned`, ``num_fragments`` defaulting to the shuffle
-    partition count). Unweighted (wcc dataframe, bfs push) keeps distinct
+    into the shuffle partition count (:func:`pin_partitioned`), the count
+    the supersteps' state exchanges use. Unweighted (wcc dataframe, bfs push) keeps distinct
     non-self-loop (src, dst) pairs; weighted (sssp dataframe) keeps the min
     weight per pair — the only weight that can win a relaxation. Built once
     per (graph, direction, weightedness); every operator call on the same
@@ -835,22 +848,20 @@ def push_adjacency_table(
             adj = adj.where(F.col("src") != F.col("dst")).dropDuplicates(
                 ["src", "dst"]
             )
-        nf = fragment_count(edges.sparkSession, num_fragments)
+        nf = int(edges.sparkSession.conf.get("spark.sql.shuffle.partitions"))
         return pin_partitioned(adj, nf, "src")
 
     return cached_prepared(edges, ("push", directed, weighted), build)
 
 
 def gather_adjacency_table(
-    edges: DataFrame,
-    key: str = "src",
-    directed: bool = False,
-    num_fragments: int | None = None,
+    edges: DataFrame, key: str = "src", directed: bool = False
 ) -> DataFrame:
     """The gather impls' shared adjacency layout: doubled (unless
     directed), parallel edges KEPT (multiplicity feeds CDLP votes and the
     reference's parallel-edge-counting degree, cdlp_utils.h:31-33),
-    pinned by the gather join key (:func:`pin_partitioned`).
+    pinned by the gather join key into the shuffle partition count
+    (:func:`pin_partitioned`).
 
     ``key="src"`` is PageRank's layout — state joins on the edge tail;
     stored serialized (MEMORY_AND_DISK) because it is the largest pinned
@@ -869,7 +880,7 @@ def gather_adjacency_table(
 
         e = edges.select("src", "dst")
         a = e if directed else _undirected(e)
-        nf = fragment_count(edges.sparkSession, num_fragments)
+        nf = int(edges.sparkSession.conf.get("spark.sql.shuffle.partitions"))
         level = StorageLevel.MEMORY_AND_DISK if key == "src" else None
         return pin_partitioned(a, nf, key, level)
 
@@ -911,14 +922,11 @@ def dst_kernel_adjacency_table(
 
 
 def cached_degree_table(
-    edges: DataFrame,
-    vertices: DataFrame,
-    adj: DataFrame,
-    directed: bool,
-    num_fragments: int | None = None,
+    edges: DataFrame, vertices: DataFrame, adj: DataFrame, directed: bool
 ) -> DataFrame:
     """Out-degree table (parallel edges counted, zero-degree vertices
-    included), pinned by ``id`` (:func:`pin_partitioned`) so PageRank's
+    included), pinned by ``id`` into the shuffle partition count
+    (:func:`pin_partitioned`) so PageRank's
     per-round state join on ``id`` reads it in place. Memoized per (edge
     table, vertices object, direction) — the vertices frame is held and
     identity-checked so a different vertex set over the same edges
@@ -934,7 +942,7 @@ def cached_degree_table(
     from libgrape_lite_spark.functions.edges import out_degrees
 
     # degree job runs outside the lock (prepare_graph builds concurrently)
-    nf = fragment_count(edges.sparkSession, num_fragments)
+    nf = int(edges.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     built = (vertices, pin_partitioned(out_degrees(adj, vertices), nf, "id"))
     with _PREP_LOCK:
         ent = cache.get(key)
@@ -1065,9 +1073,10 @@ def prepare_graph(
     operator's number measures supersteps, not whoever ran first
     (VERDICT r4: per-op times were order-dependent). Returns the layouts
     by name; they stay memoized on ``edges`` either way. Every layout is
-    pinned hash-partitioned by its join key into ``num_fragments``
-    partitions (:func:`pin_partitioned`), whatever the session's AQE
-    setting.
+    pinned hash-partitioned by its join key (:func:`pin_partitioned`),
+    whatever the session's AQE setting: the PIE and kernel layouts into
+    ``num_fragments`` partitions, the rest into the shuffle partition
+    count their supersteps' state exchanges use.
 
     The independent layout builds are submitted from a small driver
     thread pool (guide §2.6 — Spark's scheduler runs concurrent jobs
@@ -1079,18 +1088,19 @@ def prepare_graph(
     AFTER the concurrent materializations so the LRU dict is never
     mutated concurrently; ``cached_prepared`` then reuses the built
     DataFrames via each builder's memoized closure."""
-    nf = fragment_count(edges.sparkSession, num_fragments)
+    spark = edges.sparkSession
+    nf = num_fragments or int(spark.conf.get("spark.sql.shuffle.partitions"))
 
     def _src_then_degree():
         # degree depends on the src gather layout — chain them in one task
-        gsrc = gather_adjacency_table(edges, "src", directed, nf)
-        return gsrc, cached_degree_table(edges, vertices, gsrc, directed, nf)
+        gsrc = gather_adjacency_table(edges, "src", directed)
+        return gsrc, cached_degree_table(edges, vertices, gsrc, directed)
 
     builders: list[tuple[str, object]] = [
-        ("push", lambda: push_adjacency_table(edges, directed, False, nf)),
-        ("push_weighted", lambda: push_adjacency_table(edges, directed, True, nf)),
+        ("push", lambda: push_adjacency_table(edges, directed=directed, weighted=False)),
+        ("push_weighted", lambda: push_adjacency_table(edges, directed=directed, weighted=True)),
         ("_src_deg", _src_then_degree),
-        ("gather_dst", lambda: gather_adjacency_table(edges, "dst", directed, nf)),
+        ("gather_dst", lambda: gather_adjacency_table(edges, "dst", directed)),
     ]
     if kernel:
         builders.append(

@@ -32,7 +32,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from libgrape_lite_spark.functions.edges import undirected
-from libgrape_lite_spark.plans.kernels import fragment_count, pin_partitioned
+from libgrape_lite_spark.plans.kernels import pin_partitioned
 from libgrape_lite_spark.plans.superstep import IterationDriver
 from libgrape_lite_spark.session import static_plans
 
@@ -102,7 +102,9 @@ def run_vertex_program(
 
     with static_plans(spark):
         adj = edges if program.directed else undirected(edges)
-        adj = pin_partitioned(adj, fragment_count(spark), "src")
+        adj = pin_partitioned(
+            adj, int(spark.conf.get("spark.sql.shuffle.partitions")), "src"
+        )
 
         resumed = drv.latest_checkpoint()
         if resumed is not None:
@@ -190,7 +192,8 @@ def _apply_mutation(
     # re-partition + re-pin the mutated adjacency once (same contract as the
     # initial PrepareToRunApp step)
     if mut.add_edges is not None or mut.remove_edges is not None or mut.remove_vertices is not None:
-        adj = pin_partitioned(adj, fragment_count(adj.sparkSession), "src")
+        nf = int(adj.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+        adj = pin_partitioned(adj, nf, "src")
     if mut.add_vertices is not None:
         init_new = program.init(mut.add_vertices.select("id"), adj)
         if "changed" not in init_new.columns:

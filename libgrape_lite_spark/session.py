@@ -55,12 +55,12 @@ def get_spark(
     return builder.getOrCreate()
 
 
-#: guards the static_plans scope count; the AQE flag is session-wide, so
+#: guards the static_plans scope counts; the AQE flag is session-wide, so
 #: scopes entered from several driver threads (prepare_graph's pool) or
-#: nested inside each other share one save/restore
+#: nested inside each other share one save/restore per session
 _STATIC_LOCK = threading.Lock()
-_static_depth = 0
-_static_saved: str | None = None
+#: id(session) -> [open scope count, AQE value saved by the first scope]
+_static_scopes: dict[int, list] = {}
 
 
 @_contextmanager
@@ -74,23 +74,28 @@ def static_plans(spark: SparkSession):
     map-side partial aggregation + explicit salting
     (functions/partitioning.py); AQE stays on for everything else.
 
-    Scopes nest and overlap across threads: the first entry saves and
-    disables the flag, only the last exit restores it — a scope exiting
-    early must not re-enable AQE under a sibling thread's running pin.
+    Scopes on one session nest and overlap across threads: the first entry
+    saves and disables the flag, only the last exit restores it — a scope
+    exiting early must not re-enable AQE under a sibling thread's running
+    pin. Each session (each has its own SQL conf) is counted separately.
     """
-    global _static_depth, _static_saved
+    key = id(spark)
     with _STATIC_LOCK:
-        if _static_depth == 0:
-            _static_saved = spark.conf.get("spark.sql.adaptive.enabled")
+        scope = _static_scopes.get(key)
+        if scope is None:
+            scope = _static_scopes[key] = [
+                0, spark.conf.get("spark.sql.adaptive.enabled")
+            ]
             spark.conf.set("spark.sql.adaptive.enabled", "false")
-        _static_depth += 1
+        scope[0] += 1
     try:
         yield
     finally:
         with _STATIC_LOCK:
-            _static_depth -= 1
-            if _static_depth == 0:
-                spark.conf.set("spark.sql.adaptive.enabled", _static_saved)
+            scope[0] -= 1
+            if scope[0] == 0:
+                del _static_scopes[key]
+                spark.conf.set("spark.sql.adaptive.enabled", scope[1])
 
 
 def tune_shuffle_partitions(

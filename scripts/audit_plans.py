@@ -6,7 +6,8 @@ Checks (each prints PASS/FAIL and the evidence lines):
    ReadSchema) for a filtered/projected documents query.
 2. Every layout ``prepare_graph`` pins (default config, AQE on) keeps
    its hash partitioning, and a library PageRank superstep neither
-   re-exchanges nor re-sorts the pinned adjacency.
+   re-exchanges nor re-sorts the pinned adjacency (1 exchange per
+   superstep: the vertex-sized combine).
 3. Hot-path expressions run inside WholeStageCodegen.
 4. The frontier join in BFS/SSSP broadcasts the (small) frontier side.
 
@@ -31,25 +32,6 @@ def plan_of(df) -> str:
     with redirect_stdout(buf):
         df.explain("formatted")
     return buf.getvalue()
-
-
-def superstep_plans(spark, run) -> list:
-    """Run an operator with a driver that keeps each superstep's state
-    DataFrame; its executed plan is fixed when the operator materializes
-    it, inside the operator's own static_plans scope."""
-    from libgrape_lite_spark.plans.superstep import IterationDriver
-
-    plans = []
-
-    class Recorder(IterationDriver):
-        def materialize(self, df, step):
-            if step > 0:
-                df._jdf.queryExecution().executedPlan()
-                plans.append(df)
-            return super().materialize(df, step)
-
-    run(Recorder(spark)).collect()
-    return plans
 
 
 def layout_check(step, layouts) -> tuple[bool, str]:
@@ -87,9 +69,14 @@ def main() -> int:
 
     # 2. the library path: prepare_graph under the default config (AQE on)
     # pins every layout hash-partitioned by its key, and PageRank's
-    # superstep reads the gather layout with no Exchange or Sort above it
+    # superstep reads the gather layout with no Exchange or Sort above it;
+    # the one exchange left per superstep is the vertex-sized combine
     from libgrape_lite_spark.operators import pagerank, wcc
-    from libgrape_lite_spark.plans.kernels import hash_partitioning, prepare_graph
+    from libgrape_lite_spark.plans.kernels import (
+        hash_partitioning,
+        prepare_graph,
+        superstep_plans,
+    )
 
     t = events_to_transcripts(spark, SF)
     vertices, edges = build_graph_from_transcripts(t)
@@ -110,7 +97,8 @@ def main() -> int:
     ok2, ev2 = layout_check(step, layouts.values())
     n_exchange = len(re.findall(r"\(\d+\) Exchange", p2.split("== Physical Plan ==")[1]))
     results.append(("PageRank superstep (library path): gather layout not re-shuffled "
-                    "or re-sorted", ok2, f"{ev2}, exchanges={n_exchange}"))
+                    "or re-sorted (1 exchange: combine)",
+                    ok2 and n_exchange == 1, f"{ev2}, exchanges={n_exchange}"))
     sections.append(("PageRank superstep (library path: prepare_graph, then pagerank)", p2))
 
     # 3. whole-stage codegen in hot path (executed plan shows *(n) spans)
@@ -151,7 +139,9 @@ def main() -> int:
 
     # 7. PIE auto-impl superstep (cogroup + Arrow kernel + min-combine) on
     # the library path: wcc(impl="auto") over prepare_graph's fragment
-    # table must enter the cogroup with NO Exchange or Sort above its scan
+    # table must enter the cogroup with NO Exchange or Sort above its scan —
+    # only the state side's clustering and the global min-combine shuffle
+    # (2 exchanges/superstep)
     step7 = superstep_plans(
         spark, lambda d: wcc(vertices, edges, impl="auto", max_rounds=2, driver=d)
     )[-1]
@@ -162,8 +152,8 @@ def main() -> int:
     has_kernel = "FlatMapCoGroupsInPandas" in phys7
     results.append(
         ("PIE superstep (wcc auto, library path): fragment table not re-shuffled "
-         "or re-sorted into the cogroup kernel",
-         ok7 and has_kernel,
+         "or re-sorted into the cogroup kernel (2 exchanges: state + combine)",
+         ok7 and n_ex7 == 2 and has_kernel,
          f"{ev7}, exchanges={n_ex7}, "
          f"arrow cogroup kernel={'yes' if has_kernel else 'MISSING'}"))
     sections.append(("PIE local-fixpoint superstep (wcc auto, library path)", p7))

@@ -202,23 +202,15 @@ def test_static_plans_overlapping_threads(spark):
         assert spark.conf.get(key) == "false"
     assert spark.conf.get(key) == "true"
 
-
-def _superstep_plans(spark, run) -> list:
-    """Each superstep's state DataFrame from ``run(driver)``; its executed
-    plan is fixed inside the operator's own static_plans scope."""
-    from libgrape_lite_spark.plans.superstep import IterationDriver
-
-    plans = []
-
-    class Recorder(IterationDriver):
-        def materialize(self, df, step):
-            if step > 0:
-                df._jdf.queryExecution().executedPlan()
-                plans.append(df)
-            return super().materialize(df, step)
-
-    run(Recorder(spark)).collect()
-    return plans
+    # a second session has its own SQL conf and its own scope count
+    other = spark.newSession()
+    other.conf.set(key, "true")
+    with static_plans(spark):
+        with static_plans(other):
+            assert other.conf.get(key) == "false"
+        assert other.conf.get(key) == "true"
+        assert spark.conf.get(key) == "false"
+    assert spark.conf.get(key) == "true"
 
 
 def _assert_layouts_stay_partitioned(spark, v, e, nf):
@@ -227,6 +219,7 @@ def _assert_layouts_stay_partitioned(spark, v, e, nf):
         hash_partitioning,
         layout_scan_parents,
         prepare_graph,
+        superstep_plans,
     )
 
     layouts = prepare_graph(v, e)
@@ -243,7 +236,7 @@ def _assert_layouts_stay_partitioned(spark, v, e, nf):
         "wcc": lambda d: wcc(v, e, impl="auto", driver=d),
     }
     for app, run in runs.items():
-        plans = _superstep_plans(spark, run)
+        plans = superstep_plans(spark, run)
         assert plans, app
         for step, plan in enumerate(plans, 1):
             parents = layout_scan_parents(plan, layouts.values())
